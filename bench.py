@@ -181,12 +181,6 @@ def main() -> None:
             prev = json.load(f).get("queries", {})
     except (OSError, ValueError):
         pass
-    # One-time watch list (round-12 verdict item 1): the three queries
-    # whose r12 isolated remeasures read 5-18x their in-sweep times are
-    # force-remeasured once so BENCH_r13 carries isolated rows proving
-    # the fixed isolation path (parent stopped, one JVM per query) now
-    # agrees with the sweep.
-    force = {"q_als_factors", "q_kaplan_meier", "q_test_functional_dep"}
     # Flag on the SAME criterion that can ever mark a row regressed
     # (>1.5x AND >=0.75 s absolute — round 13): a sub-second query whose
     # delta can never clear the materiality bound cannot produce a
@@ -197,10 +191,8 @@ def main() -> None:
         name
         for name, secs in timings.items()
         if prev.get(name)
-        and (
-            (secs > 1.5 * prev[name] and secs - prev[name] >= 0.75)
-            or name in force
-        )
+        and secs > 1.5 * prev[name]
+        and secs - prev[name] >= 0.75
     ]
     # Hard cap as a runaway bound: keep the most material flags (by
     # absolute delta); anything past the cap keeps its sweep value and

@@ -48,23 +48,15 @@ def test_oracle_keys_subset():
 
 
 def test_priority_order_names_are_registered():
-    """Every PRIORITY_ORDER name must exist in the registry — a dangling
-    name is silently skipped by _ordered_registry, which would quietly
-    shift the verification window (the round-3 advice finding). Names
-    retired via the documented displacement ledger (DISPLACED) are the
-    one exception: the historical window-head tuples stay verbatim."""
-    from weather_api_automate_etl_spark.queries import DISPLACED, PRIORITY_ORDER
+    """The driver-facing order holds every registered query exactly once,
+    and the evidence files name no query the registry has lost except
+    q_compression_fixed, displaced in round 10 (PARITY.md). A renamed or
+    dropped query must not leave green rows behind unnoticed."""
+    from weather_api_automate_etl_spark.queries import queries
 
-    dangling = [
-        n for n in PRIORITY_ORDER if n not in REGISTRY and n not in DISPLACED
-    ]
-    assert not dangling, f"PRIORITY_ORDER lists unregistered queries: {dangling}"
-    ghosts = set(DISPLACED) & set(REGISTRY)
-    assert not ghosts, f"DISPLACED queries still registered: {ghosts}"
-    # a displaced name must not occupy a slot in the CURRENT window
-    from weather_api_automate_etl_spark.queries import ROUND12_WINDOW_HEAD
-
-    assert not set(DISPLACED) & set(ROUND12_WINDOW_HEAD)
+    names = list(queries())
+    assert sorted(names) == sorted(REGISTRY)
+    assert set(_last_verified_round()) - set(REGISTRY) == {"q_compression_fixed"}
 
 
 def _driver_verified() -> set[str]:
@@ -107,78 +99,96 @@ def _last_verified_round() -> dict[str, int]:
 
 
 def test_priority_prefix_covers_every_family():
-    """External verification records exactly the first 50 registry entries
-    per round; round 11 drove the never-driver-sampled set to ZERO, so
-    from round 12 on the window is pure rotation. Pin round 12's evidence
-    strategy, executed exactly as staged last round (round-11 verdict
-    item 1): the window is the committed ROUND12_PENDING schedule
-    verbatim — the 38 remaining r5-era rows + the 12-name r6-era cohort
-    head. Everything outside the window already holds a green driver row,
-    and the stalest of those rows are explicitly queued in the committed
-    ROUND13_PENDING schedule."""
-    from weather_api_automate_etl_spark.queries import (
-        R5_ERA_STALE,
-        R6_ERA_HEAD,
-        ROUND12_PENDING,
-        ROUND12_WINDOW_HEAD,
-        ROUND13_PENDING,
-        queries,
-    )
+    """The driver hash-checks the first 50 entries of queries() each round.
+    The order is computed from the committed CORRECTNESS files: stalest
+    last-green round first, ties by registration order. Checked here
+    against this module's own evidence readers: the head-50 is the next
+    window, every family re-verifies within the 7-round freshness bound,
+    and nothing outside the head lacks a green driver row."""
+    from weather_api_automate_etl_spark.queries import oracle_sql, queries
 
-    q = queries()
-    assert len(q) == len(REGISTRY), "ordering must not drop registered queries"
-    names = list(q)
+    names = list(queries())
+    assert len(names) == len(REGISTRY) and set(names) == set(REGISTRY), (
+        "the order must be a permutation of the registry"
+    )
     verified = _driver_verified()
     unverified = set(REGISTRY) - verified
     assert not unverified, (
         "round 11 drove the never-driver-sampled set to zero; it must "
         f"stay zero: {unverified}"
     )
-    k = len(ROUND12_WINDOW_HEAD)
-    assert k == 50, "the driver records exactly the first 50 entries"
-    assert names[:k] == list(ROUND12_WINDOW_HEAD)
-    assert ROUND12_WINDOW_HEAD == R5_ERA_STALE[3:] + R6_ERA_HEAD, (
-        "round 12's window is exactly the staged schedule: the 38 "
-        "remaining r5-era rows + the r6-era cohort head (round-11 "
-        "verdict item 1)"
-    )
-    assert names[50:100] == list(ROUND13_PENDING) and len(ROUND13_PENDING) == 50, (
-        "round 13's committed schedule must hold slots 51-100"
-    )
-    assert not set(ROUND12_PENDING) & set(ROUND13_PENDING)
     # every registered query carries a DuckDB oracle (no no_oracle rows
     # since the round-9 portable-HLL / zlib-lookup upgrades).
-    from weather_api_automate_etl_spark.queries import oracle_sql
-
     assert set(oracle_sql()) == set(REGISTRY), (
         "every registered query must carry a DuckDB oracle: "
         f"missing {set(REGISTRY) - set(oracle_sql())}"
     )
-    # Staleness guard — the HONEST bound. With 327 queries and a 50-slot
-    # window the full cycle is ceil(327/50) = 7 rounds, so "≤4 rounds
-    # stale" is impossible registry-wide. What the committed schedule
-    # guarantees: a row last verified in round r exceeds 7 rounds at the
-    # close of round r+8, so with evidence through round N every row
-    # with r <= N-6 must already sit in the current or committed-next
-    # window (it re-verifies within two rounds, before the bound trips).
     last = _last_verified_round()
-    n_max = max(last.values())  # latest recorded round
-    overdue = {n for n, r in last.items() if r <= n_max - 6}
-    scheduled = set(ROUND12_WINDOW_HEAD) | set(ROUND13_PENDING)
-    assert overdue <= scheduled, (
-        f"rows about to exceed the 7-round freshness bound are unscheduled: "
-        f"{overdue - scheduled}"
+    rank = {name: last.get(name, 0) for name in REGISTRY}
+    head, tail = names[:50], names[50:]
+    assert max(rank[n] for n in head) <= min(rank[n] for n in tail), (
+        "the 50-entry window must hold the stalest green rows"
     )
-    prefix = names[:50]
-    tags_in_prefix = {tag for name in prefix for tag in REGISTRY[name].tags}
-    # the round-12 window spans the r5-era corpus/embedding/streaming
-    # cohort and the r6-era changepoint/analytics head. Multimodal and
-    # the §2 ingest backbone hold r11 rows (the freshest possible) so
-    # they take no slots this round.
-    for family in ("corpus", "streaming", "text", "quality", "dedup"):
-        assert family in tags_in_prefix, f"family {family!r} missing from prefix"
+    position = {name: i for i, name in enumerate(REGISTRY)}
+    keys = [(rank[n], position[n]) for n in names]
+    assert keys == sorted(keys), (
+        "the order must be stalest-first with ties in registration order"
+    )
+    # Freshness bound. With 327 queries and a 50-slot window a full cycle
+    # is ceil(327/50) = 7 rounds. A row last verified in round r exceeds
+    # 7 rounds at the close of round r+8, so with evidence through round
+    # N every registered row with r <= N-6 must sit in the current or
+    # next window (it re-verifies within two rounds, before the bound
+    # trips). Displaced names are not registered and can never re-verify.
+    n_max = max(last.values())
+    overdue = {n for n in REGISTRY if rank[n] <= n_max - 6}
+    assert overdue <= set(names[:100]), (
+        f"rows about to exceed the 7-round freshness bound are unscheduled: "
+        f"{overdue - set(names[:100])}"
+    )
     # everything outside the window must already be driver-verified
-    outside = set(names[50:]) - verified
+    outside = set(tail) - verified
     assert not outside, (
         f"queries outside the window lack prior driver rows: {outside}"
     )
+
+
+def _write_evidence(d, rnd: int, rows: dict[str, bool]) -> None:
+    """One synthetic 50-row CORRECTNESS file: ``rows`` maps a name to
+    whether its row is green; filler names pad the file to 50."""
+    import json
+
+    body = {
+        name: {"rows_match": green, "schema_match": True}
+        for name, green in rows.items()
+    }
+    for i in range(50 - len(body)):
+        body[f"q_pad{i}"] = {"rows_match": True, "schema_match": True}
+    (d / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(body))
+
+
+def test_stalest_first_without_evidence_keeps_registration_order(tmp_path):
+    from weather_api_automate_etl_spark.queries import stalest_first
+
+    assert stalest_first(tmp_path, ["q_b", "q_a", "q_c"]) == ["q_b", "q_a", "q_c"]
+
+
+def test_stalest_first_red_row_does_not_refresh(tmp_path):
+    from weather_api_automate_etl_spark.queries import stalest_first
+
+    _write_evidence(tmp_path, 1, {"q_a": True, "q_b": True})
+    _write_evidence(tmp_path, 2, {"q_a": False, "q_b": True})
+    # q_c was never sampled (round 0); q_a's last green row is round 1,
+    # so it moves ahead of q_b (round 2) despite registering later
+    assert stalest_first(tmp_path, ["q_b", "q_a", "q_c"]) == ["q_c", "q_a", "q_b"]
+
+
+def test_stalest_first_malformed_evidence_raises(tmp_path):
+    import json
+
+    from weather_api_automate_etl_spark.queries import stalest_first
+
+    rows = {f"q_{i}": {"rows_match": True, "schema_match": True} for i in range(49)}
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(rows))
+    with pytest.raises(ValueError, match="malformed"):
+        stalest_first(tmp_path, ["q_0"])

@@ -1,7 +1,7 @@
 """Round-7 wave-12 tests: the approximate profile's error bound + plan
 shape (no Expand). (The constructed-payload compression margin tests
 lived here rounds 7-9; they retired with q_compression_fixed's round-10
-displacement — queries.py::DISPLACED.)"""
+displacement, recorded in PARITY.md.)"""
 
 from __future__ import annotations
 

@@ -820,7 +820,7 @@ def q_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Per-doc invariants (bounds, monotonicity, cross-level bucket
     stability, regime anchors) stay pinned in tests/test_mlprep.py.
     (The constructed-payload twin q_compression_fixed covered this
-    operator rounds 7-9; displaced in round 10 — queries.py::DISPLACED.)"""
+    operator rounds 7-9; displaced in round 10, see PARITY.md.)"""
     per_doc = textops.compression_ratio(t(spark, sf_dir, "documents"))
     return (
         per_doc.filter(F.col("ratio").isNotNull())
